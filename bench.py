@@ -308,6 +308,22 @@ def _sentinel_time(by_name, spark, reps: int = 3) -> float:
     return round(best, 3)
 
 
+INLINE_TOP = 10  # slowest queries echoed in the last stdout line
+
+
+def _previous_top(report_path: str) -> list[str]:
+    """The :data:`INLINE_TOP` slowest queries of the previous run's
+    full ``queries`` map at ``report_path`` — the top set that run
+    echoed inline; empty when there is no readable previous report."""
+    try:
+        with open(report_path) as fh:
+            prev = json.load(fh)["queries"]
+        ranked = sorted(prev.items(), key=lambda kv: -float(kv[1]))
+    except (OSError, ValueError, KeyError, TypeError, AttributeError):
+        return []
+    return [name for name, _ in ranked[:INLINE_TOP]]
+
+
 def main() -> None:
     by_name = {q.name: q for q in REGISTRY}
     bench_set = os.environ.get("SPARK_GRAFT_BENCH_SET", "")
@@ -569,6 +585,7 @@ def main() -> None:
     report_path = os.environ.get("SPARK_GRAFT_BENCH_OUT") or os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL_LATEST.json"
     )
+    prev_inline = _previous_top(report_path)
     try:
         with open(report_path, "w") as fh:
             json.dump(full, fh, indent=1, sort_keys=True)
@@ -584,26 +601,14 @@ def main() -> None:
                 {n: v["corrected"] for n, v in sorted(corrected.items())}
             ),
         )
-    # The inline map carries the 10 slowest queries PLUS last round's
-    # inline set (VERDICT r8 #6): the round-over-round comparator
+    # The inline map carries the 10 slowest queries PLUS the previous
+    # run's 10 slowest (VERDICT r8 #6): the round-over-round comparator
     # diffs the inline maps, so a query that leaves the top-10
-    # because it was OPTIMIZED otherwise reads as "dropped" (6 false
-    # drops in r8). Union keeps every previously-reported query
-    # visible with its new (faster) number. ADD-only per the driver
-    # contract — nothing is removed or renamed.
-    prev_inline = [
-        "zorder_pruning_audit",
-        "textrank_keywords_documents",
-        "max_coverage_doc_selection",
-        "lsh_blocking_quality",
-        "streaming_sessionize_events",
-        "nelson_aalen_hazard",
-        "hurst_rs_daily_revenue",
-        "jaccard_prefix_filter_pairs",
-        "ann_ivf_indexed_recall_floor",
-        "uplift_by_segment_events",
-    ]
-    inline = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
+    # because it was OPTIMIZED otherwise reads as "dropped". Union
+    # keeps every previously-reported query visible with its new
+    # (faster) number. ADD-only per the driver contract — nothing is
+    # removed or renamed.
+    inline = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:INLINE_TOP])
     for name in prev_inline:
         if name in timings:
             inline.setdefault(name, timings[name])
@@ -617,7 +622,8 @@ def main() -> None:
         "runs_per_query": runs,
         "aggregation": "min",
         # brief schema compliance without tail overflow: the slowest
-        # 10 + last round's inline set; the full map is in queries_file
+        # 10 + the previous run's slowest 10; the full map is in
+        # queries_file
         "queries": inline,
         "queries_file": os.path.basename(report_path),
         "sentinel_first_s": sentinel_first,

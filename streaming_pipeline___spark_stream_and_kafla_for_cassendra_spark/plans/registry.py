@@ -123,8 +123,10 @@ _REGISTERED_NAMES: set[str] = set()
 #
 # * ``python-stateful`` (applyInPandasWithState operators): the
 #   per-group work runs in PYTHON workers and is CPU-bound Arrow
-#   group processing, so these keep the full session parallelism
-#   (measured r6: sessionize 4.4 s at 32 parts vs 8.6 s at 8).
+#   group processing, so these keep the session's shuffle partitions,
+#   which ``get_session`` sizes to the core count: one task, and one
+#   Python worker start, per core (4-core box: sessionize 6.0 s at 4
+#   partitions vs 17.2 s at 32, same output).
 # * everything else (JVM stateful: windowed agg, dedup,
 #   stream-stream join): partition count derives from an ESTIMATED
 #   state volume — per-partition state-store open/commit/snapshot
@@ -185,7 +187,7 @@ class _stream_conf:
     builder (set → build+run → restore). Plain try/finally class so
     the wrapped builder stays picklable and introspectable.
     ``python-stateful``-tagged queries leave the session conf
-    untouched (full parallelism — see the sizing-rule comment)."""
+    untouched (the core count — see the sizing-rule comment)."""
 
     def __init__(self, spark, name, sf_dir=None, tags=()):
         self.spark = spark

@@ -17,6 +17,19 @@ Scale notes (the configs that matter at 100 TB / 1000 executors):
   deterministic across clusters (and match the DuckDB oracle).
 * Arrow enabled so any pandas-UDF path is columnar-batched, never
   row-at-a-time pickling.
+
+Sizing comes from the machine, not from tuned constants:
+
+* ``spark.sql.shuffle.partitions`` defaults to the session's core
+  count (``defaultParallelism``, the N of ``local[N]``). Structured
+  Streaming freezes it into every stateful query's checkpoint, and
+  each state-store partition pays an open, commit and delta-file cost
+  on every trigger, so more partitions than cores only adds per-batch
+  overhead; AQE coalescing already sizes batch shuffles by bytes.
+* ``spark.driver.memory`` is half of physical RAM (``MemTotal``):
+  ``local[N]`` runs driver and executors in one JVM whose stock 1 GiB
+  heap dies under checkpoint and broadcast pressure, and the other
+  half stays for Python workers and the page cache.
 """
 
 from __future__ import annotations
@@ -25,13 +38,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-# local[*] runs driver+executors in ONE JVM whose default heap is 1g —
-# 32 concurrent task threads starve and the JVM dies under checkpoint/
-# broadcast pressure long before the machine (128 GiB) is anywhere
-# near full. Only effective when set before the JVM launches.
-DEFAULT_DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "24g")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _driver_memory() -> str | None:
+    """Half of ``MemTotal`` as a JVM size; None where /proc/meminfo is
+    not available (Spark's default applies)."""
+    try:
+        with open("/proc/meminfo", encoding="ascii") as fh:
+            kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return None
+    return f"{kib // 2 // 1024}m"
 
 
 def get_session(
@@ -43,7 +61,9 @@ def get_session(
     """Build (or fetch) the engine SparkSession.
 
     On a real cluster ``master`` comes from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
+    default to ``local[$SPARK_GRAFT_CPUS]``, else one slot per CPU this
+    process may run on. ``shuffle_partitions`` (or the key in
+    ``extra_conf``) overrides the core-count default.
     """
     # Pin per-process BLAS/OpenMP pools to ONE thread for every Python
     # worker: a Spark task is already the unit of parallelism, so an
@@ -74,7 +94,6 @@ def get_session(
         builder = builder.master(f"local[{DEFAULT_CPUS}]")
 
     conf = {
-        "spark.driver.memory": DEFAULT_DRIVER_MEMORY,
         # reference parity: MSP:36-40
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -93,9 +112,6 @@ def get_session(
         # let custom Python data sources receive pushed filters
         # (sources/cdc_source.py clamps its generated range with them)
         "spark.sql.python.filterPushdown.enabled": "true",
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-        ),
         # keep local runs quiet and snappy
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
@@ -103,11 +119,21 @@ def get_session(
     }
     for var in _blas_vars:
         conf[f"spark.executorEnv.{var}"] = os.environ[var]
+    # only effective when set before the JVM launches
+    driver_memory = _driver_memory()
+    if driver_memory:
+        conf["spark.driver.memory"] = driver_memory
+    if shuffle_partitions:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in conf:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -115,10 +115,14 @@ class LakeTable:
 
     def _dedupe(self, df: DataFrame) -> DataFrame:
         """Keep the newest row per record key (precombine desc) —
-        Hudi's precombine semantics (MSP:265-266)."""
-        w = Window.partitionBy(self.record_key).orderBy(
-            F.col(self.precombine_field).desc()
-        )
+        Hudi's precombine semantics (MSP:265-266). The default
+        precombine field is the batch's processing time, so versions
+        of one key inside one micro-batch tie on it; a CDC frame's
+        ``event_timestamp`` breaks the tie, so the latest change wins."""
+        order = [F.col(self.precombine_field).desc()]
+        if "event_timestamp" in df.columns:
+            order.append(F.col("event_timestamp").desc())
+        w = Window.partitionBy(self.record_key).orderBy(*order)
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)

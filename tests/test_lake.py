@@ -44,6 +44,29 @@ def test_upsert_within_batch_dedupe(spark, tmp_path):
     assert got == ["b"]  # precombine max wins inside one batch too
 
 
+def test_upsert_within_batch_tie_newest_event_wins(spark, tmp_path):
+    """Two CDC versions of one id in one micro-batch share the batch's
+    processing time; the later ``event_timestamp`` must survive, in
+    either arrival order."""
+    import datetime as dt
+
+    d = dt.date(2024, 1, 3)
+    batch_ts = dt.datetime(2024, 1, 3, 12, 0, 0)
+    older = (1, "older", batch_ts, d, dt.datetime(2024, 1, 3, 11, 0, 0))
+    newer = (1, "newer", batch_ts, d, dt.datetime(2024, 1, 3, 11, 0, 1))
+    for i, rows in enumerate(([older, newer], [newer, older])):
+        table = LakeTable(path=str(tmp_path / f"tie{i}"))
+        table.upsert_batch(
+            spark.createDataFrame(
+                rows,
+                "id int, val string, processing_timestamp timestamp, "
+                "processing_date date, event_timestamp timestamp",
+            ),
+            spark,
+        )
+        assert [r.val for r in table.read(spark).collect()] == ["newer"]
+
+
 def test_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     import datetime as dt
 

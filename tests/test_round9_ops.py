@@ -107,6 +107,15 @@ def test_sprt_decisions_respect_boundaries(spark):
             assert r["steps_used"] == min(r["n_scanned"], 400)
 
 
+def test_split_on_empty_pattern_yields_one_element_per_char(spark):
+    """The SPRT char fold splits its capped prefix with ``split(s, '')``
+    and counts characters with ``size``; pin that Spark yields one
+    element per character, with no trailing empty string."""
+    r = spark.sql("SELECT split('abc', '') AS xs, size(split('abc', '')) AS n").first()
+    assert r["n"] == 3
+    assert r["xs"] == ["a", "b", "c"]
+
+
 def test_huber_location_between_min_and_mean_side(spark):
     r = _run(spark, "huber_location_daily_revenue")[0]
     # a robust location stays within scale of the mean
